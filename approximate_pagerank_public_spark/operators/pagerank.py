@@ -203,16 +203,20 @@ def _run_broadcast(
     start_it = 0
     ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
     if ckpt and resume:
-        loaded = ckpt.load_latest(graph.spark)
+        loaded = ckpt.load_latest()
         if loaded is not None:
             start_it, pr, metrics = loaded
+    config = {
+        "alpha": alpha,
+        "tol": tol,
+        "max_iter": max_iter,
+        "sources": sources,
+        "dangling_norm": dangling_norm,
+    }
 
-    # Fast path: the loop runs as gang-scheduled barrier jobs (see
-    # plans/barrier.py). Without checkpointing it is ONE job; with a
-    # checkpoint dir it runs in chunks of `checkpoint_every`
-    # supersteps with a durable save between chunks — same save points
-    # and resume semantics as the per-superstep path, job overhead
-    # amortized over the chunk.
+    # Fast path: ONE gang-scheduled barrier job runs every superstep
+    # (see plans/barrier.py); with a checkpoint dir its leader saves
+    # in-gang at the same points as the per-superstep path below.
     from approximate_pagerank_public_spark.plans.barrier import (
         barrier_available,
         run_barrier_pagerank,
@@ -220,60 +224,26 @@ def _run_broadcast(
 
     if barrier_available(graph):
         try:
-            it_b = start_it
-            pr_b = pr
-            metrics_b = list(metrics)
-            conv_b = False
-            phases: dict = {}
-            config = {
-                "alpha": alpha,
-                "tol": tol,
-                "max_iter": max_iter,
-                "sources": sources,
-                "dangling_norm": dangling_norm,
-            }
-            while it_b < max_iter:
-                chunk = (
-                    min(checkpoint_every, max_iter - it_b)
-                    if ckpt
-                    else max_iter - it_b
-                )
-                state, m, its, conv_b, phases = run_barrier_pagerank(
-                    graph,
-                    alpha,
-                    tol,
-                    chunk,
-                    sources,
-                    init_state=(
-                        pr_b
-                        if (ckpt or it_b > 0 or init_ranks is not None)
-                        else None
-                    ),
-                    iter_offset=it_b,
-                    dangling_norm=dangling_norm,
-                    post_superstep=post_superstep,
-                )
-                if its > 0:
-                    pr_b = state
-                metrics_b.extend(m)
-                it_b += its
-                if ckpt:
-                    ckpt.save(
-                        graph.spark,
-                        it_b,
-                        pr_b,
-                        metrics_b,
-                        config=config,
-                        num_partitions=graph.num_partitions,
-                    )
-                if conv_b or its < chunk:
-                    break
+            state, m, its, conv, phases = run_barrier_pagerank(
+                graph,
+                alpha,
+                tol,
+                max_iter - start_it,
+                sources,
+                init_state=pr,
+                iter_offset=start_it,
+                dangling_norm=dangling_norm,
+                post_superstep=post_superstep,
+                ckpt=ckpt,
+                history=metrics,
+                config=config,
+            )
             return PageRankResult(
-                iterations=it_b,
-                converged=conv_b,
-                metrics=metrics_b,
+                iterations=start_it + its,
+                converged=conv,
+                metrics=metrics + m,
                 sources=sources,
-                ranks_np=pr_b,
+                ranks_np=state,
                 _graph=graph,
                 phase_timings=phases,
             )
@@ -322,20 +292,7 @@ def _run_broadcast(
             }
         )
         if ckpt:
-            ckpt.save(
-                graph.spark,
-                it,
-                pr,
-                metrics,
-                config={
-                    "alpha": alpha,
-                    "tol": tol,
-                    "max_iter": max_iter,
-                    "sources": sources,
-                    "dangling_norm": dangling_norm,
-                },
-                num_partitions=graph.num_partitions,
-            )
+            ckpt.save(it, pr, metrics, config=config)
         if l1.max() <= tol:
             converged = True
             break

@@ -54,18 +54,32 @@ same chunking, so the stop scalars (and hence the convergence
 iteration) are bit-identical across both paths and any task count.
 
 Engages only when: local master with /dev/shm (state is shared
-pages), CSR blocks built, dst-disjoint partitioning. Durable
-checkpointing runs the loop in chunks of ``checkpoint_every``
-supersteps via ``init_state``/``iter_offset`` with a save between
-chunks. Every other case falls back. On a
-multi-node cluster the same protocol would exchange state via
-executor-local disk + torrent broadcast; that variant is
+pages), CSR blocks built, dst-disjoint partitioning. Every other case
+falls back. On a multi-node cluster the same protocol would exchange
+state via executor-local disk + torrent broadcast; that variant is
 intentionally not emulated here.
+
+**One gang per run, checkpointing included.** With a
+``CheckpointManager`` the leader saves the finalized ``state_t`` when
+``(t + iter_offset) % every == 0``, after ``row_done[t]`` (every row
+finalized) and before it releases ``ctl`` (every other task is still
+waiting on it, so nothing writes the buffers). The save is a pyarrow
+write (``plans/checkpoint.py``), so a checkpointed run costs one Spark
+job at any ``checkpoint_every``; the save points, manifest and resume
+semantics match the per-superstep path.
+
+**The scratch files are never msync'd.** The state buffers, flags and
+partials are same-host ``MAP_SHARED`` page cache: other processes see
+a store without msync, and nothing needs them after the job, so their
+durability is never paid for. It is not free to pay it: on an ext4
+``discard`` mount, unlinking a file that was msync'd took 50-100 ms
+against <1 ms unflushed (11 such files made the run directory's
+``rmtree`` 0.7-0.8 s per call); on tmpfs both cost ~0. Only the
+checkpoint is durable.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -119,7 +133,6 @@ def _shared(path: str, shape, dtype, fill=None):
     mm = np.lib.format.open_memmap(path, mode="w+", dtype=dtype, shape=shape)
     if fill is not None:
         mm[:] = fill
-    mm.flush()
     return mm
 
 
@@ -187,12 +200,10 @@ def run_barrier_min_relax(
     try:
         st = _shared(f"{run_dir}/state.npy", (n, s), state.dtype)
         st[:] = state
-        st.flush()
         del st
         _shared(f"{run_dir}/snap.npy", (n, s), state.dtype)
         li = _shared(f"{run_dir}/last_imp.npy", (n,), np.int32, -1)
         li[np.asarray(changed, dtype=bool)] = 0
-        li.flush()
         del li
         _shared(f"{run_dir}/copy_done.npy", (ntasks,), np.int64, -1)
         _shared(f"{run_dir}/relax_done.npy", (ntasks,), np.int64, -1)
@@ -308,20 +319,25 @@ def run_barrier_pagerank(
     tol: float,
     max_iter: int,
     sources: list[int] | None,
-    init_state: np.ndarray | None = None,
+    init_state: np.ndarray,
     iter_offset: int = 0,
     dangling_norm: bool = True,
     post_superstep=None,
+    ckpt=None,
+    history: list[dict] | None = None,
+    config: dict | None = None,
 ) -> tuple[np.ndarray, list[dict], int, bool, dict]:
     """Returns ``(state (S,N), metrics, iterations, converged, phases)``
     where ``iterations`` counts supersteps run in THIS call and
     ``phases`` is the min/max per-task seconds spent in each loop phase
-    (out-of-band — never mixed into the scalar metrics rows).
+    (out-of-band — never mixed into the scalar metrics rows); with
+    ``ckpt`` it includes ``"ckpt"``, the leader's save seconds.
 
-    ``init_state``/``iter_offset`` let a checkpointing caller run the
-    loop in chunks: one barrier job per ``checkpoint_every`` supersteps,
-    durable save between chunks, resume mid-computation — the job-level
-    overhead amortizes over the chunk instead of every superstep.
+    ``init_state`` (S, N) is ``state_0``; ``iter_offset`` numbers the
+    supersteps of a resumed run. ``ckpt`` (a ``CheckpointManager``)
+    makes the leader save inside the gang (see module docstring); each
+    save's manifest carries ``history`` (the metrics rows before this
+    call) plus this call's rows, and ``config``.
 
     ``dangling_norm=False`` drops the dangling-mass term entirely — the
     reference PPR's optional ``norm`` flag (``ppr.gm:14-16``).
@@ -346,15 +362,7 @@ def run_barrier_pagerank(
         for b in range(3):
             _shared(f"{run_dir}/state_buf{b}.npy", (n, s), np.float64)
         st0 = np.load(f"{run_dir}/state_buf0.npy", mmap_mode="r+")
-        if init_state is not None:
-            st0[:] = np.ascontiguousarray(np.atleast_2d(init_state).T)
-        elif sources is None:
-            st0[:] = 1.0 / n
-        else:
-            st0[:] = 0.0
-            for i, src in enumerate(sources):
-                st0[src, i] = 1.0
-        st0.flush()
+        st0[:] = np.atleast_2d(init_state).T
         del st0
         np.save(f"{run_dir}/dang_idx.npy", np.flatnonzero(graph.dangling_mask()))
         _shared(f"{run_dir}/shift.npy", (s,), np.float64, 0.0)
@@ -372,6 +380,7 @@ def run_barrier_pagerank(
 
         block_dir = blocks.dir
         src_list = sources
+        hist = list(history or [])
         deadline_s = 3600.0
         # greedy LPT assignment: heaviest block to the least-loaded task
         # (dynamic O_EXCL claim-stealing was tried and measured WORSE —
@@ -437,6 +446,9 @@ def run_barrier_pagerank(
             t = 0
             t_wall = time.perf_counter()
             ph = {"wait": 0.0, "rowwork": 0.0, "ctl": 0.0, "fill": 0.0, "compute": 0.0}
+            if ckpt is not None:
+                ph["ckpt"] = 0.0
+            rows: list[dict] = []  # leader only: this call's metrics rows
 
             def _tick():
                 nonlocal _last
@@ -471,22 +483,20 @@ def run_barrier_pagerank(
                         conv = bool(l1.max() <= tol)
                         stop = stop or conv
                         now = time.perf_counter()
-                        with open(f"{run_dir}/metrics.jsonl", "a") as f:
-                            f.write(
-                                json.dumps(
-                                    {
-                                        "iter": t + iter_offset,
-                                        "l1_err": float(l1.max()),
-                                        "sq_l2_err": float(sq.max()),
-                                        "dangling_sum": float(
-                                            np.asarray(dang_p).sum(axis=0).max()
-                                        ),
-                                        "wall_ms": (now - t_wall) * 1e3,
-                                    }
-                                )
-                                + "\n"
-                            )
-                        t_wall = now
+                        rows.append(
+                            {
+                                "iter": t + iter_offset,
+                                "l1_err": float(l1.max()),
+                                "sq_l2_err": float(sq.max()),
+                                "dangling_sum": float(np.asarray(dang_p).sum(axis=0).max()),
+                                "wall_ms": (now - t_wall) * 1e3,
+                            }
+                        )
+                        if ckpt is not None and (t + iter_offset) % ckpt.every == 0:
+                            ph["ctl"] += _tick()
+                            ckpt.save(t + iter_offset, np.asarray(st).T, hist + rows, config)
+                            ph["ckpt"] += _tick()
+                        t_wall = time.perf_counter()
                     if not stop and dangling_norm:
                         d = np.asarray(dang_p).sum(axis=0)  # (S,) dangling dot
                         shift_arr[:] = (alpha / n) * d
@@ -518,23 +528,19 @@ def run_barrier_pagerank(
                 ph["compute"] += _tick()
                 t += 1
                 compute_done[me] = t
-            return iter([(me, t, ph)])
+            return iter([(me, t, ph, rows)])
 
-        rows = (
+        out = (
             sc.parallelize(range(ntasks), ntasks)
             .barrier()
             .mapPartitions(loop)
             .collect()
         )
-        t_final = max(r[1] for r in rows)
-        phases = {k: (min(r[2][k] for r in rows), max(r[2][k] for r in rows)) for k in rows[0][2]}
+        t_final = max(r[1] for r in out)
+        phases = {k: (min(r[2][k] for r in out), max(r[2][k] for r in out)) for k in out[0][2]}
         ctl = np.load(f"{run_dir}/ctl.npy")
         state = np.ascontiguousarray(np.load(f"{run_dir}/state_buf{t_final % 3}.npy").T)
-        metrics: list[dict] = []
-        mpath = f"{run_dir}/metrics.jsonl"
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                metrics = [json.loads(line) for line in f if line.strip()]
+        metrics = next(r[3] for r in out if r[0] == 0)
         phases = {k: (round(v[0], 3), round(v[1], 3)) for k, v in phases.items()}
         return state, metrics, int(ctl[3]), bool(ctl[2]), phases
     finally:

@@ -6,19 +6,30 @@ the per-iteration convergence-error series the FPGA kernel writes back
 (``multi_personalized_pagerank.cpp:96-108,223-229``); we extend it to a
 durable manifest.
 
-Layout under ``<dir>/``:
+Layout under ``<dir>/`` for driver-resident (S, N) state
+(:meth:`CheckpointManager.save` / :meth:`~CheckpointManager.load_latest`,
+no Spark involved, so a barrier-gang leader can save from inside a task):
 
-- ``iter_<k>/ranks.parquet`` — vertex state ``(id, c0..c{S-1})``,
-  hash-partitioned by ``id`` (same partitioning the loop uses, so resume
-  does not reshuffle);
-- ``manifest.json`` — atomically replaced each save:
+- ``iter_<k>.parquet`` — one pyarrow file ``(id, c0..c{S-1})``, rows
+  in id order. Written as ``.iter_<k>.parquet.tmp`` (a dot name, which
+  readers and Spark skip) and ``os.replace``-d into place, so a killed
+  save leaves at worst a stray temp file, never a partial checkpoint;
+- ``manifest.json`` — written LAST, atomically replaced each save:
   ``{"latest": k, "num_vertices", "num_sources", "config",
-  "iterations": [{iter, l1_err, sq_l2_err, wall_ms, rows}, ...],
-  "lineage": {iter: [{partition, rows}, ...]}}``.
+  "iterations": [{iter, l1_err, sq_l2_err, wall_ms, ...}, ...],
+  "lineage": {k: [{partition, rows}, ...]}}``.
 
-Durable parquet (not ``localCheckpoint``) is used for the resumable
-checkpoints; the iterative loops additionally truncate lineage in-memory
-every superstep.
+Cluster-resident state (:meth:`~CheckpointManager.save_df` /
+:meth:`~CheckpointManager.load_latest_df`) stays a Spark write:
+``iter_<k>/ranks.parquet`` is a directory of part files, hash-partitioned
+by ``id`` as the loop holds it (resume does not reshuffle), and its
+lineage lists every partition.
+
+Durable means it survives a killed process: there is no fsync, the
+same choice the Spark writer makes. Durable parquet (not
+``localCheckpoint``) is used for the resumable checkpoints; the
+iterative loops additionally truncate lineage in-memory every
+superstep.
 """
 
 from __future__ import annotations
@@ -29,6 +40,8 @@ import time
 from contextlib import contextmanager
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,60 +130,49 @@ class CheckpointManager:
         with open(self._manifest_path) as f:
             return json.load(f)
 
-    def _write_manifest(self, manifest: dict) -> None:
+    def _commit(self, iteration: int, metrics: list[dict], config, lineage, **fields) -> None:
+        """Point the manifest at iteration k (atomic replace, written
+        after the state it names). ``metrics`` is the caller's full
+        history; ``lineage`` the row count of each written partition."""
+        manifest = self.read_manifest() or {"lineage": {}}
+        manifest.update(fields)
+        manifest.update(
+            latest=iteration,
+            config=config or manifest.get("config", {}),
+            updated_unix=time.time(),
+            iterations=metrics,
+        )
+        manifest["lineage"][str(iteration)] = lineage
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic
 
+    def _iter_path(self, iteration: int) -> str:
+        return os.path.join(self.path, f"iter_{iteration:05d}.parquet")
+
     # ---------------------------------------------------------------- save
     def save(
         self,
-        spark: SparkSession,
         iteration: int,
         rank: np.ndarray,
         metrics: list[dict],
         config: dict | None = None,
-        num_partitions: int = 32,
     ) -> None:
         """Persist an (S, N) rank block + manifest for iteration k."""
         if iteration % self.every != 0:
             return
-        import pandas as pd
-
         rank2d = np.atleast_2d(rank)
         s, n = rank2d.shape
-        pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64)})
+        cols = {"id": np.arange(n, dtype=np.int64)}
         for i in range(s):
-            pdf[f"c{i}"] = rank2d[i]
-        df = spark.createDataFrame(pdf).repartition(num_partitions, "id")
-        it_dir = os.path.join(self.path, f"iter_{iteration:05d}")
-        df.write.mode("overwrite").parquet(os.path.join(it_dir, "ranks.parquet"))
-        # per-partition lineage: row count per physical partition
-        lineage_rows = (
-            df.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        manifest = self.read_manifest() or {
-            "iterations": [],
-            "lineage": {},
-        }
-        manifest.update(
-            {
-                "latest": iteration,
-                "num_vertices": int(n),
-                "num_sources": int(s),
-                "num_partitions": int(num_partitions),
-                "config": config or manifest.get("config", {}),
-                "updated_unix": time.time(),
-            }
-        )
-        manifest["iterations"] = metrics  # caller tracks the full history
-        manifest["lineage"][str(iteration)] = [
-            {"partition": int(r["partition"]), "rows": int(r["rows"])} for r in lineage_rows
-        ]
-        self._write_manifest(manifest)
+            cols[f"c{i}"] = np.ascontiguousarray(rank2d[i], dtype=np.float64)
+        path = self._iter_path(iteration)
+        tmp = os.path.join(self.path, f".{os.path.basename(path)}.tmp")
+        pq.write_table(pa.table(cols), tmp)
+        os.replace(tmp, path)
+        lineage = [{"partition": 0, "rows": int(n)}]
+        self._commit(iteration, metrics, config, lineage, num_vertices=int(n), num_sources=int(s))
 
     # ------------------------------------------------------- DataFrame API
     def save_df(
@@ -191,21 +193,8 @@ class CheckpointManager:
             .agg(F.count("*").alias("rows"))
             .collect()
         )
-        manifest = self.read_manifest() or {"iterations": [], "lineage": {}}
-        manifest.update(
-            {
-                "latest": iteration,
-                "mode": "dataframe",
-                "columns": ranks.columns,
-                "config": config or manifest.get("config", {}),
-                "updated_unix": time.time(),
-            }
-        )
-        manifest["iterations"] = metrics
-        manifest["lineage"][str(iteration)] = [
-            {"partition": int(r["partition"]), "rows": int(r["rows"])} for r in lineage_rows
-        ]
-        self._write_manifest(manifest)
+        lineage = [{"partition": int(r["partition"]), "rows": int(r["rows"])} for r in lineage_rows]
+        self._commit(iteration, metrics, config, lineage, mode="dataframe", columns=ranks.columns)
 
     def load_latest_df(self, spark: SparkSession):
         """→ (iteration, ranks DataFrame, metric history) or None."""
@@ -217,18 +206,36 @@ class CheckpointManager:
         return it, spark.read.parquet(path), list(manifest.get("iterations", []))
 
     # ---------------------------------------------------------------- load
-    def load_latest(self, spark: SparkSession) -> tuple[int, np.ndarray, list[dict]] | None:
-        """Resume point: (iteration, (S,N) rank block, metric history)."""
+    def load_latest(self) -> tuple[int, np.ndarray, list[dict]] | None:
+        """Resume point: (iteration, (S,N) rank block, metric history).
+
+        Raises ``ValueError`` naming the file when it is unreadable or
+        disagrees with the manifest: row count, ids not exactly
+        ``0..N-1``, or columns other than ``id, c0..c{S-1}``."""
         manifest = self.read_manifest()
         if not manifest or "latest" not in manifest:
             return None
         it = manifest["latest"]
         s = manifest["num_sources"]
         n = manifest["num_vertices"]
-        path = os.path.join(self.path, f"iter_{it:05d}", "ranks.parquet")
-        pdf = spark.read.parquet(path).toPandas()
-        pdf = pdf.sort_values("id")
+        path = self._iter_path(it)
+        try:
+            table = pq.read_table(path)
+        except pa.ArrowInvalid as ex:
+            raise ValueError(f"checkpoint {path} is unreadable: {ex}") from ex
+        cols = [f"c{i}" for i in range(s)]
+        if table.column_names != ["id", *cols]:
+            raise ValueError(
+                f"checkpoint {path} has columns {table.column_names}, "
+                f"manifest expects id + c0..c{s - 1}"
+            )
+        if table.num_rows != n:
+            raise ValueError(f"checkpoint {path} has {table.num_rows} rows, manifest expects {n}")
+        ids = table.column("id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        if not np.array_equal(ids[order], np.arange(n)):
+            raise ValueError(f"checkpoint {path} ids do not cover 0..{n - 1} exactly once")
         rank = np.empty((s, n), dtype=np.float64)
-        for i in range(s):
-            rank[i] = pdf[f"c{i}"].to_numpy(np.float64)
+        for i, c in enumerate(cols):
+            rank[i] = table.column(c).to_numpy()[order]
         return it, rank, list(manifest.get("iterations", []))
