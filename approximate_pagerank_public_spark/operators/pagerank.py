@@ -16,18 +16,19 @@ Semantics match the reference goldens exactly (see
   block, so the edge stream is read once per iteration regardless of S,
   exactly how the FPGA amortizes its memory streams across 8 queries.
 
-Execution modes:
+Execution modes (plain PageRank, PPR and multi-PPR are one loop with
+``sources=None``, ``[source]`` or S sources):
 
-- ``mode='broadcast'`` — Arrow-kernel supersteps (1 Spark job each),
-  driver holds O(S·N) f64 state. Right when the vertex state fits the
-  driver (≲ 10^8 vertices).
-- ``mode='distributed'`` — pure-DataFrame supersteps (|E|-row join +
-  hash agg) with co-partitioned rank state and in-memory lineage
-  truncation every iteration; vertex state never leaves the cluster.
+- ``mode='broadcast'`` — driver holds O(S·N) f64 state; every superstep
+  runs in ONE gang-scheduled barrier job (``plans/barrier.py``), falling
+  back to one Arrow-kernel Spark job per superstep. Right when the
+  vertex state fits the driver.
 - ``mode='distributed-arrow'`` — cluster-state supersteps over shared-FS
-  CSR blocks with packed message shuffles and vectorized NumPy kernels
-  (``plans/distblocks.py``). The recommended path at 10^12-turn scale.
-- ``mode='auto'`` picks by ``num_vertices``.
+  CSR blocks with spilled message payloads and vectorized NumPy kernels
+  (``plans/distblocks.py``); vertex state never leaves the cluster. The
+  path at 10^12-turn scale.
+- ``mode='auto'`` picks by ``num_vertices``. Any other value raises
+  ``ValueError``.
 
 Every superstep appends to the iteration-metrics series
 ``(iter, l1_err, sq_l2_err, dangling_sum, wall_ms)`` — the reference's
@@ -44,10 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from approximate_pagerank_public_spark.operators.spmv import (
-    gather_contrib,
-    gather_contrib_df,
-)
+from approximate_pagerank_public_spark.operators.spmv import gather_contrib
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CheckpointManager,
     free_local_ckpt,
@@ -56,15 +54,12 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
-# Mode-selection cutover, now MEASURED at the protocol-max graph
-# (BENCH_SCALING.json `distributed-twin/ppr-supersteps`, |E|=1e8):
-# the single-host barrier/block path sustains ~1.1B edge-traversals/s
-# while the distributed DataFrame twin reaches ~51M on the same box —
-# the per-superstep join+agg shuffle is bandwidth-bound, so on ONE node
-# broadcast mode wins whenever driver state fits. The twin is the
-# correct mode only when vertex state exceeds a single machine
-# (> ~0.8 GB/source of f64 at this threshold) or no shm is available;
-# its shuffle then spreads across the cluster's aggregate bandwidth.
+# Mode-selection cutover for mode='auto', MEASURED at the protocol-max
+# graph (BENCH_SCALING.json, |E|=1e8): the single-host barrier/block
+# path sustains ~1.1B edge-traversals/s, and beat every cluster-state
+# path on one box, so broadcast wins whenever driver state fits. Above
+# it (> ~0.8 GB/source of f64) the state moves to distributed-arrow,
+# whose message shuffle spreads across the cluster's aggregate bandwidth.
 BROADCAST_MAX_VERTICES = 100_000_000
 
 try:  # job/scheduling failures surface as Py4J errors in classic PySpark
@@ -306,304 +301,26 @@ def _run_broadcast(
     )
 
 
-def _run_distributed(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    source: int | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-    init_ranks: DataFrame | None = None,
-) -> PageRankResult:
-    """Pure-DataFrame supersteps; vertex state stays on the cluster.
-
-    Per iteration: dangling-dot scalar agg, gather join + partial/final
-    hash agg, axpb projection, L1 scalar agg; rank state is re-hashed to
-    the loop's partitioning and lineage-truncated (``localCheckpoint``).
-    """
-    spark = graph.spark
-    n = graph.num_vertices
-    p = graph.num_partitions
-    verts = graph.vertices
-    if source is None and init_ranks is not None:
-        ranks = verts.join(
-            init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
-        ).select("id", F.coalesce("_ir", F.lit(1.0 / n)).alias("rank"))
-    elif source is None:
-        ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    else:
-        ranks = verts.withColumn(
-            "rank", F.when(F.col("id") == source, 1.0).otherwise(0.0)
-        )
-    ranks, rank_ids = local_ckpt(ranks.repartition(p, "id"))
-    dangling = graph.dangling_vertices().repartition(p, "id").persist()
-    dangling.count()
-
-    metrics: list[dict] = []
-    start_it = 0
-    ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    if ckpt and resume:
-        loaded = ckpt.load_latest_df(graph.spark)
-        if loaded is not None:
-            start_it, ranks_df, metrics = loaded
-            new, new_ids = local_ckpt(ranks_df.repartition(p, "id"))
-            free_local_ckpt(spark, rank_ids)
-            ranks, rank_ids = new, new_ids
-    converged = False
-    it = start_it
-    for it in range(start_it + 1, max_iter + 1):
-        t0 = time.perf_counter()
-        d = (
-            ranks.join(dangling, "id", "left_semi").agg(F.sum("rank")).first()[0]
-            or 0.0
-            if dangling_norm
-            else 0.0
-        )
-        contribs = gather_contrib_df(graph, ranks)
-        shift = (alpha / n) * d + ((1.0 - alpha) / n if source is None else 0.0)
-        new_rank = F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(shift)
-        if source is not None:
-            new_rank = new_rank + F.when(F.col("id") == source, 1.0 - alpha).otherwise(0.0)
-        new, new_ids = local_ckpt(
-            verts.join(contribs, verts.id == contribs.dst, "left")
-            .select("id", new_rank.alias("rank"))
-            .repartition(p, "id")
-        )
-        err_row = (
-            new.join(ranks.withColumnRenamed("rank", "_old"), "id")
-            .agg(
-                F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1"),
-                F.sum(F.pow(F.col("rank") - F.col("_old"), 2)).alias("sq"),
-            )
-            .first()
-        )
-        free_local_ckpt(spark, rank_ids)
-        ranks, rank_ids = new, new_ids
-        metrics.append(
-            {
-                "iter": it,
-                "l1_err": float(err_row["l1"]),
-                "sq_l2_err": float(err_row["sq"]),
-                "dangling_sum": float(d),
-                "wall_ms": (time.perf_counter() - t0) * 1e3,
-            }
-        )
-        if ckpt:
-            ckpt.save_df(
-                ranks,
-                it,
-                metrics,
-                config={"alpha": alpha, "tol": tol, "max_iter": max_iter, "source": source},
-            )
-        if err_row["l1"] <= tol:
-            converged = True
-            break
-    dangling.unpersist()
-    return PageRankResult(
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-        sources=None if source is None else [source],
-        ranks_df=ranks.withColumnRenamed("rank", "rank_0" if source is not None else "rank"),
-        _graph=graph,
-    )
-
-
-def _run_distributed_multi(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    sources: list[int],
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-) -> PageRankResult:
-    """Distributed 8-source PPR: the (S, N) rank block is S rank columns
-    on a co-partitioned vertex DataFrame; every superstep is ONE edge
-    join + ONE groupBy(dst) aggregating all S weighted sums — the edge
-    relation is read once per superstep regardless of S, exactly the
-    FPGA's multi-query amortization, but with vertex state that never
-    leaves the cluster. Durable checkpoints use the same
-    ``save_df``/``load_latest_df`` protocol as ``_run_distributed``, so
-    a killed 10^12-scale multi-query run resumes mid-computation."""
-    spark = graph.spark
-    n = graph.num_vertices
-    p = graph.num_partitions
-    s = len(sources)
-    cols = [f"r{i}" for i in range(s)]
-    verts = graph.vertices
-    init = [
-        F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
-        for c, src in zip(cols, sources)
-    ]
-    ranks, rank_ids = local_ckpt(verts.select("id", *init).repartition(p, "id"))
-    dangling = graph.dangling_vertices().repartition(p, "id").persist()
-    dangling.count()
-
-    metrics: list[dict] = []
-    start_it = 0
-    ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    if ckpt and resume:
-        loaded = ckpt.load_latest_df(graph.spark)
-        if loaded is not None:
-            start_it, ranks_df, metrics = loaded
-            new, new_ids = local_ckpt(
-                ranks_df.select("id", *cols).repartition(p, "id")
-            )
-            free_local_ckpt(spark, rank_ids)
-            ranks, rank_ids = new, new_ids
-    converged = False
-    it = start_it
-    for it in range(start_it + 1, max_iter + 1):
-        t0 = time.perf_counter()
-        if dangling_norm:
-            drow = (
-                ranks.join(dangling, "id", "left_semi")
-                .agg(*[F.sum(c).alias(c) for c in cols])
-                .first()
-            )
-            d = [float(drow[c] or 0.0) for c in cols]
-        else:
-            d = [0.0] * s
-        r = ranks.withColumnRenamed("id", "src")
-        contribs = (
-            graph.edges.join(r, "src")
-            .groupBy("dst")
-            .agg(*[F.sum(F.col("weight") * F.col(c)).alias(c) for c in cols])
-        )
-        new_cols = []
-        for i, (c, src) in enumerate(zip(cols, sources)):
-            expr = (
-                F.lit(alpha) * F.coalesce(contribs[c], F.lit(0.0))
-                + F.lit(alpha / n * d[i])
-                + F.when(F.col("id") == src, 1.0 - alpha).otherwise(0.0)
-            )
-            new_cols.append(expr.alias(c))
-        new, new_ids = local_ckpt(
-            verts.join(contribs, verts.id == contribs.dst, "left")
-            .select("id", *new_cols)
-            .repartition(p, "id")
-        )
-        old = ranks.select("id", *[F.col(c).alias(f"_o{i}") for i, c in enumerate(cols)])
-        err_row = (
-            new.join(old, "id")
-            .agg(
-                *[
-                    F.sum(F.abs(F.col(c) - F.col(f"_o{i}"))).alias(c)
-                    for i, c in enumerate(cols)
-                ]
-            )
-            .first()
-        )
-        l1 = max(float(err_row[c]) for c in cols)
-        free_local_ckpt(spark, rank_ids)
-        ranks, rank_ids = new, new_ids
-        metrics.append(
-            {
-                "iter": it,
-                "l1_err": l1,
-                "sq_l2_err": None,
-                "dangling_sum": max(d),
-                "wall_ms": (time.perf_counter() - t0) * 1e3,
-            }
-        )
-        if ckpt:
-            ckpt.save_df(
-                ranks,
-                it,
-                metrics,
-                config={
-                    "alpha": alpha,
-                    "tol": tol,
-                    "max_iter": max_iter,
-                    "sources": sources,
-                    "dangling_norm": dangling_norm,
-                },
-            )
-        if l1 <= tol:
-            converged = True
-            break
-    dangling.unpersist()
-    out = ranks.select(
-        "id", *[F.col(c).alias(f"rank_{i}") for i, c in enumerate(cols)]
-    )
-    return PageRankResult(
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-        sources=sources,
-        ranks_df=out,
-        _graph=graph,
-    )
-
-
 def _run_distributed_arrow(
     graph: Graph,
     alpha: float,
     tol: float,
     max_iter: int,
     sources: list[int] | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-    init_ranks: DataFrame | None = None,
-) -> PageRankResult:
-    """Pin the loop's partition layout, then run the superstep loop.
-
-    The checkpointed state must stay hash(id, p) across supersteps (the
-    shuffle-hash join streams it in place only then); AQE partition
-    coalescing re-plans the contribs exchange to fewer partitions and
-    the layout drifts superstep over superstep (measured: escalating
-    5→29 s supersteps at |E|=10⁸ / 32 cores). See
-    :func:`~approximate_pagerank_public_spark.plans.checkpoint.pinned_confs`.
-    """
-    with pinned_confs(
-        graph.spark,
-        {
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-            "spark.sql.shuffle.partitions": str(graph.num_partitions),
-        },
-    ):
-        return _run_distributed_arrow_impl(
-            graph,
-            alpha,
-            tol,
-            max_iter,
-            sources,
-            checkpoint_dir,
-            checkpoint_every,
-            resume,
-            dangling_norm,
-            init_ranks,
-        )
-
-
-def _run_distributed_arrow_impl(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    sources: list[int] | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
+    checkpoint_dir: str | None,
+    checkpoint_every: int,
+    resume: bool,
     dangling_norm: bool = True,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
     """Message-shuffle supersteps over shared-FS CSR blocks — the
     cluster-scale path (``plans/distblocks.py``; single source, plain
-    PageRank, and the (S, N) multi-PPR block all share it).
+    PageRank, and the (S, N) multi-PPR block all share it). Runs under
+    :func:`_run`'s pinned partition layout.
 
-    Per superstep (vs ``_run_distributed``'s |E|-row join + |E|-row hash
-    agg): one job whose only all-to-all is packed per-(state partition,
-    block) binary messages feeding the L2-tiled NumPy SpMV against
-    mmap-cached blocks, then one narrow scan for the stop scalars
+    Per superstep: one job whose only all-to-all is packed per-(state
+    partition, block) binary messages feeding the L2-tiled NumPy SpMV
+    against mmap-cached blocks, then one narrow scan for the stop scalars
     (carried as diff columns on the checkpointed state, so no second
     join) which ALSO computes the next iteration's dangling dot
     (dangling ⇔ empty routing column) — so the dangling term costs no
@@ -778,17 +495,78 @@ def _run_distributed_arrow_impl(
     )
 
 
-def _pick_mode(graph: Graph, mode: str) -> str:
-    if mode != "auto":
-        return mode
-    # beyond driver-resident state, the message-shuffle block path is the
-    # measured winner over the join-based twin (BENCH_SCALING.json
-    # `distributed-twin` rows) — the join twin stays reachable explicitly
-    return (
-        "broadcast"
-        if graph.num_vertices <= BROADCAST_MAX_VERTICES
-        else "distributed-arrow"
-    )
+_MODES = ("auto", "broadcast", "distributed-arrow")
+
+
+def _run(
+    graph: Graph,
+    sources: list[int] | None,
+    mode: str,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    checkpoint_dir: str | None,
+    checkpoint_every: int,
+    resume: bool,
+    dangling_norm: bool = True,
+    init_ranks: DataFrame | None = None,
+) -> PageRankResult:
+    """The one dispatcher behind :func:`pagerank` (``sources=None``),
+    :func:`personalized_pagerank` (``[source]``) and :func:`multi_ppr`.
+
+    Raises ``ValueError`` on a ``mode`` outside ``_MODES``, and on a
+    resume from a checkpoint dir written by another path or with another
+    ``alpha`` / ``sources`` / ``dangling_norm`` (``tol`` and
+    ``max_iter`` may differ: a resumed run may tighten or extend them).
+    """
+    if mode not in _MODES:
+        raise ValueError(f"unknown PageRank mode {mode!r}; expected one of {_MODES}")
+    if mode == "auto":
+        mode = (
+            "broadcast"
+            if graph.num_vertices <= BROADCAST_MAX_VERTICES
+            else "distributed-arrow"
+        )
+    if checkpoint_dir and resume:
+        manifest = CheckpointManager(checkpoint_dir).read_manifest()
+        if manifest and "latest" in manifest:
+            # only save_df tags its format, so broadcast dirs carry no mode
+            saved = dict(manifest.get("config", {}), mode=manifest.get("mode"))
+            call = {
+                "mode": "dataframe" if mode == "distributed-arrow" else None,
+                "alpha": alpha,
+                "sources": sources,
+                "dangling_norm": dangling_norm,
+            }
+            for key, value in call.items():
+                if saved.get(key) != value:
+                    raise ValueError(
+                        f"checkpoint dir {checkpoint_dir} was saved with "
+                        f"{key}={saved.get(key)!r}, this call has {key}={value!r}; "
+                        "use a fresh dir or resume=False"
+                    )
+    if mode == "broadcast":
+        return _run_broadcast(
+            graph, alpha, tol, max_iter, sources, checkpoint_dir,
+            checkpoint_every, resume, dangling_norm, init_ranks=init_ranks,
+        )
+    # The checkpointed state must stay hash(id, p) across supersteps (the
+    # shuffle-hash join streams it in place only then); AQE partition
+    # coalescing re-plans the contribs exchange to fewer partitions and
+    # the layout drifts superstep over superstep (measured: escalating
+    # 5→29 s supersteps at |E|=10⁸ / 32 cores). See
+    # :func:`~approximate_pagerank_public_spark.plans.checkpoint.pinned_confs`.
+    with pinned_confs(
+        graph.spark,
+        {
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": str(graph.num_partitions),
+        },
+    ):
+        return _run_distributed_arrow(
+            graph, alpha, tol, max_iter, sources, checkpoint_dir,
+            checkpoint_every, resume, dangling_norm, init_ranks,
+        )
 
 
 def pagerank(
@@ -810,22 +588,11 @@ def pagerank(
     cold iteration count. Ids absent from ``init_ranks`` (new vertices)
     start at the cold 1/N; values are used verbatim (the damped
     iteration's fixed point is independent of starting mass). Works on
-    all three execution paths; ``max_iter=0`` returns the filled init
+    both execution paths; ``max_iter=0`` returns the filled init
     state itself (useful to inspect the fill rule)."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-            resume, init_ranks=init_ranks,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-            resume, init_ranks=init_ranks,
-        )
-    return _run_distributed(
-        graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-        resume, init_ranks=init_ranks,
+    return _run(
+        graph, None, mode, alpha, tol, max_iter, checkpoint_dir,
+        checkpoint_every, resume, init_ranks=init_ranks,
     )
 
 
@@ -843,21 +610,10 @@ def personalized_pagerank(
 ) -> PageRankResult:
     """``dangling_norm=False`` reproduces the reference's ``norm=false``
     PGX runs (``ppr.gm:14-16``): the dangling-mass redistribution term
-    is skipped entirely, in all three execution paths."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, [source], checkpoint_dir, checkpoint_every,
-            resume, dangling_norm=dangling_norm,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, [source], checkpoint_dir, checkpoint_every,
-            resume, dangling_norm=dangling_norm,
-        )
-    return _run_distributed(
-        graph, alpha, tol, max_iter, source, checkpoint_dir, checkpoint_every,
-        resume, dangling_norm=dangling_norm,
+    is skipped entirely, on both execution paths."""
+    return _run(
+        graph, [source], mode, alpha, tol, max_iter, checkpoint_dir,
+        checkpoint_every, resume, dangling_norm,
     )
 
 
@@ -878,18 +634,7 @@ def multi_ppr(
     kernel instead runs a fixed budget — pass ``tol=0`` +
     ``max_iter=m`` to reproduce that exactly). ``dangling_norm=False``
     drops the dangling term (``ppr.gm:14-16``)."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-            checkpoint_every, resume, dangling_norm=dangling_norm,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-            checkpoint_every, resume, dangling_norm=dangling_norm,
-        )
-    return _run_distributed_multi(
-        graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-        checkpoint_every, resume, dangling_norm=dangling_norm,
+    return _run(
+        graph, list(sources), mode, alpha, tol, max_iter, checkpoint_dir,
+        checkpoint_every, resume, dangling_norm,
     )

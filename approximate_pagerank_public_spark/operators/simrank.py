@@ -239,7 +239,7 @@ def simrank_mc(
     )
     state, ck_ids = local_ckpt(state)
 
-    def _pick(cur: str, t: int) -> tuple[F.Column, str]:
+    def _pick(cur: str, t: int) -> F.Column:
         """rank drawn on the state side: md5(seed:l:t:cur) % ind."""
         payload = F.concat_ws(
             ":", F.lit(seed), F.col("l"), F.lit(str(t)), F.col(cur)

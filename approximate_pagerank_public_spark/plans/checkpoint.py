@@ -135,6 +135,9 @@ class CheckpointManager:
         after the state it names). ``metrics`` is the caller's full
         history; ``lineage`` the row count of each written partition."""
         manifest = self.read_manifest() or {"lineage": {}}
+        # only save_df tags its format: a dir reused by the other path
+        # (resume=False) must not keep the previous run's tag
+        manifest.pop("mode", None)
         manifest.update(fields)
         manifest.update(
             latest=iteration,

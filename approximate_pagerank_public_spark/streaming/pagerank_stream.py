@@ -32,7 +32,7 @@ production analogue is an Iceberg MERGE/snapshot per name):
 Scale notes: everything here is joins/windows/hash-aggs on the
 micro-batch plus one dedup over the cumulative edge set; the PageRank
 itself runs through the ordinary engine (mode cutover, checkpointing,
-all three execution paths). Nothing iterates on the driver.
+both execution paths). Nothing iterates on the driver.
 """
 
 from __future__ import annotations

@@ -7,9 +7,9 @@ real multi-executor 100-TB cluster would run — had no measurement above
 G(n,m) input the barrier campaign used (|V|=1e6, |E|=1e8, seed 42,
 skew 0.1):
 
-- multi-PPR supersteps in ``mode='distributed'`` (join + hash agg,
-  state never leaves the cluster) at two parallelism levels -> the
-  twin's own N->4N scaling efficiency;
+- multi-PPR supersteps in ``mode='distributed-arrow'`` (message-shuffle
+  block path, state never leaves the cluster) at two parallelism levels
+  -> the path's own N->4N scaling efficiency;
 - connected components, distributed min-prop and star modes;
 - 50-source BFS through the DataFrame twin (``multi_source_bfs``);
 - warm single-source block BFS (the missing PGX head-to-head point).
@@ -55,9 +55,8 @@ kind = {kind!r}
 
 if kind == "ppr":
     from approximate_pagerank_public_spark.operators.pagerank import multi_ppr
-    # distributed twins: state stays on-cluster. mode='distributed' is the
-    # join+agg twin; 'distributed-arrow' the message-shuffle block path
-    # (its one-time store build is reported separately).
+    # state stays on-cluster: 'distributed-arrow' is the message-shuffle
+    # block path (its one-time store build is reported separately).
     mode = {prmode!r}
     if mode == "distributed-arrow":
         t0 = time.perf_counter()
@@ -109,7 +108,7 @@ def run_worker(kind: str, cpus: int, v: int, e: int, timeout: int, **kw) -> dict
         e=e,
         kind=kind,
         iters=kw.get("iters", 5),
-        prmode=kw.get("prmode", "distributed"),
+        prmode=kw.get("prmode", "distributed-arrow"),
         ccmode=kw.get("ccmode", "distributed"),
         n_sources=kw.get("n_sources", 50),
     )
@@ -241,23 +240,7 @@ def main() -> None:
             "(pid,srcs,vals) shuffle + mmap-cached CSR SpMV; state on-cluster",
             {"lo": lo_a, "hi": hi_a, "scaling_efficiency": eff_a},
         )
-        if arrow_only:
-            flush()
-            return
-
-        # 1. distributed multi-PPR supersteps at 8/32 cores -> twin efficiency
-        lo = run_worker("ppr", 8, v, e, to, iters=5)
-        hi = run_worker("ppr", 32, v, e, to, iters=5)
-        eff = None
-        if "et_per_sec" in lo and "et_per_sec" in hi:
-            eff = round(hi["et_per_sec"] / (4 * lo["et_per_sec"]), 3)
-        rec(
-            "ppr-supersteps",
-            "pure-DataFrame twin (join + hash agg per superstep, state "
-            "on-cluster); compare to barrier-path 1039-1134M ET/s at 32 cores",
-            {"lo": lo, "hi": hi, "scaling_efficiency": eff},
-        )
-        if "--ppr-only" in sys.argv:
+        if arrow_only or "--ppr-only" in sys.argv:
             flush()
             return
 

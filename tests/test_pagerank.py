@@ -78,32 +78,21 @@ def test_multi_ppr_matches_golden(g_rand):
     assert np.allclose(res.ranks_np, gold, atol=1e-6)
 
 
-def test_distributed_mode_parity(g5):
-    src, dst, w = g5.edges_numpy()
-    gold, _ = golden.golden_pagerank(src, dst, w, 5, tol=0.0, max_iter=8)
-    res = pagerank(g5, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    assert np.allclose(pdf["rank"].to_numpy(), gold, atol=1e-12)
-
-
-def test_distributed_ppr_parity(g5):
-    src, dst, w = g5.edges_numpy()
-    gold, _ = golden.golden_ppr(2, src, dst, w, 5, tol=0.0, max_iter=8)
-    res = personalized_pagerank(g5, 2, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    assert np.allclose(pdf["rank_0"].to_numpy(), gold, atol=1e-12)
-
-
-def test_distributed_multi_ppr_parity(g5):
-    from approximate_pagerank_public_spark.functions import golden as G
-
-    src, dst, w = g5.edges_numpy()
-    sources = [0, 2, 4]
-    gold = G.golden_multi_ppr(sources, src, dst, w, 5, tol=0.0, max_iter=8)
-    res = multi_ppr(g5, sources, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    for i in range(3):
-        assert np.allclose(pdf[f"rank_{i}"].to_numpy(), gold[i], atol=1e-12), f"src {sources[i]}"
+@pytest.mark.parametrize("mode", ["broadcst", "distributed"])
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda g, mode: pagerank(g, mode=mode),
+        lambda g, mode: personalized_pagerank(g, 2, mode=mode),
+        lambda g, mode: multi_ppr(g, [0, 2], mode=mode),
+    ],
+    ids=["pagerank", "ppr", "multi_ppr"],
+)
+def test_unknown_mode_raises(g5, run, mode):
+    """A mistyped mode, or the retired DataFrame join twin's
+    ``"distributed"``, fails loudly instead of picking a path."""
+    with pytest.raises(ValueError, match=f"'{mode}'.*'broadcast', 'distributed-arrow'"):
+        run(g5, mode)
 
 
 def test_barrier_mode_bit_parity_with_per_superstep(g_rand, monkeypatch):
@@ -164,12 +153,12 @@ def test_ppr_dangling_norm_off_all_paths_agree(g_rand, monkeypatch):
     fb = personalized_pagerank(g_rand, 3, tol=0.0, max_iter=8, dangling_norm=False)
     assert np.array_equal(gold.ranks_np, fb.ranks_np)
     dist = personalized_pagerank(
-        g_rand, 3, tol=0.0, max_iter=8, mode="distributed", dangling_norm=False
+        g_rand, 3, tol=0.0, max_iter=8, mode="distributed-arrow", dangling_norm=False
     )
     pdf = dist.ranks().toPandas().sort_values("id")
     assert np.allclose(pdf["rank_0"].to_numpy(), gold.ranks_np[0], atol=1e-12)
     multi = multi_ppr(
-        g_rand, [3, 5], tol=0.0, max_iter=8, mode="distributed", dangling_norm=False
+        g_rand, [3, 5], tol=0.0, max_iter=8, mode="distributed-arrow", dangling_norm=False
     )
     mdf = multi.ranks().toPandas().sort_values("id")
     assert np.allclose(mdf["rank_0"].to_numpy(), gold.ranks_np[0], atol=1e-12)
@@ -207,13 +196,13 @@ def test_warm_start_fill_rule_and_max_iter_zero(g_rand):
 
 def test_warm_start_paths_agree_bitwise(g_rand):
     """Fixed-budget warm continuation from a partial init matches
-    across broadcast, distributed, and distributed-arrow paths."""
+    across the broadcast and distributed-arrow paths."""
     import pyspark.sql.functions as F
 
     cold = pagerank(g_rand, mode="broadcast", tol=0.0, max_iter=5)
     part = cold.ranks().where(F.col("id") % 3 != 0)
     outs = {}
-    for mode in ("broadcast", "distributed", "distributed-arrow"):
+    for mode in ("broadcast", "distributed-arrow"):
         outs[mode] = (
             pagerank(g_rand, mode=mode, tol=0.0, max_iter=3, init_ranks=part)
             .ranks()
@@ -221,7 +210,6 @@ def test_warm_start_paths_agree_bitwise(g_rand):
             .sort_values("id")["rank"]
             .to_numpy()
         )
-    assert np.allclose(outs["broadcast"], outs["distributed"], atol=1e-12)
     assert np.allclose(outs["broadcast"], outs["distributed-arrow"], atol=1e-12)
 
 
