@@ -228,12 +228,12 @@ def _subtree_xor_broadcast(
 
 def _bridge_parts(
     graph: Graph, mode: str, max_iter: int
-) -> tuple[DataFrame, DataFrame, Graph]:
-    """Shared core → ``(bridges, pairs, und)``.  ``bridges`` is
-    localCheckpoint-materialized (safe after ``und.unpersist``);
-    ``pairs`` is the canonical ``a<b`` undirected pair list, still
-    lineage-bound to ``und`` — callers that keep it must materialize
-    before unpersisting ``und``."""
+) -> tuple[DataFrame, DataFrame]:
+    """Shared core → ``(bridges, pairs)`` over ``graph.undirected()``
+    (memoized on ``graph``, released by ``graph.unpersist``).
+    ``bridges`` is localCheckpoint-materialized; ``pairs`` is the
+    canonical ``a<b`` undirected pair list, still lineage-bound to the
+    memoized edges."""
     und = graph.undirected()
     n = und.num_vertices
     spark, p = graph.spark, und.num_partitions
@@ -327,15 +327,14 @@ def _bridge_parts(
         )
         free_local_ckpt(spark, sig_ids)
     free_local_ckpt(spark, lv_ids)
-    return bridges_df, pairs, und
+    return bridges_df, pairs
 
 
 def bridges(graph: Graph, mode: str = "auto", max_iter: int = 10_000) -> DataFrame:
     """``(a, b)`` canonical (``a < b``) bridge edges of the
     symmetrized graph.  See the module docstring for the algorithm and
     the md5-collision caveat."""
-    bridges_df, _pairs, und = _bridge_parts(graph, mode, max_iter)
-    und.unpersist()
+    bridges_df, _pairs = _bridge_parts(graph, mode, max_iter)
     return bridges_df
 
 
@@ -350,11 +349,9 @@ def two_edge_components(
         star_components_edges,
     )
 
-    bridges_df, pairs, und = _bridge_parts(graph, mode, max_iter)
-    spark, p = graph.spark, und.num_partitions
-    surviving = pairs.join(bridges_df, ["a", "b"], "left_anti").localCheckpoint()
-    und.unpersist()
-    roots, _rounds = star_components_edges(spark, surviving, p)
+    bridges_df, pairs = _bridge_parts(graph, mode, max_iter)
+    surviving = pairs.join(bridges_df, ["a", "b"], "left_anti")
+    roots, _rounds = star_components_edges(graph.spark, surviving, graph.num_partitions)
     verts = graph.vertices
     return verts.join(roots, verts["id"] == roots["a"], "left").select(
         "id",

@@ -5,17 +5,21 @@ centrality*, not components — ``src/cpu/src/main/resources/cc.gm:1-28``;
 components here run on the same superstep machinery as PageRank with
 ``min`` replacing ``sum``).
 
+All modes run on ``Graph.undirected()``, which is memoized on the
+input graph: repeated calls reuse one cached symmetrized edge set and
+its CSR blocks, released by the input graph's ``unpersist()``.
+
 Semantics: every vertex starts labeled with its own id; each superstep
 every vertex takes the min of its own label and its neighbors' labels
 (over the symmetrized edge set); fixpoint labels are the component ids
 (= min vertex id in the component).
 
-Modes mirror ``pagerank``: an Arrow broadcast kernel
-(``np.minimum.reduceat`` over dst-sorted batches, one Spark job per
-superstep) and a distributed DataFrame mode (join + ``groupBy(dst).min``)
-for vertex states beyond driver memory. Iteration count is bounded by
-the graph diameter; at web scale, switch-to large-star/small-star is a
-known follow-up, noted in the module TODO.
+Modes: ``broadcast`` runs a frontier-sparse min relaxation on the CSR
+blocks (without blocks, an Arrow ``np.minimum.reduceat`` kernel, one
+Spark job per superstep); ``distributed`` is the DataFrame twin (join +
+``groupBy(dst).min``) for vertex states beyond driver memory; ``star``
+(large-star/small-star) converges in O(log n) rounds where min-label
+propagation needs O(diameter).
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     local_ckpt,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+
+_CC_MODES = ("auto", "broadcast", "distributed", "star")
 
 _MIN_SCHEMA = StructType(
     [StructField("dst", LongType()), StructField("lbl", LongType())]
@@ -267,26 +273,29 @@ def connected_components(
     ``mode``: ``broadcast`` (Arrow min-label kernel, O(diameter)
     supersteps), ``distributed`` (DataFrame min-prop twin), or ``star``
     (large-star/small-star, O(log n) rounds — the path-graph-safe choice
-    for high-diameter graphs at any scale)."""
+    for high-diameter graphs at any scale). The symmetrized graph is
+    ``graph.undirected()``, memoized on ``graph`` and released by
+    ``graph.unpersist()``."""
+    if mode not in _CC_MODES:
+        raise ValueError(
+            f"connected_components: unknown mode {mode!r}; expected one of {_CC_MODES}"
+        )
     und = graph.undirected()
     if mode == "auto":
         mode = "broadcast" if graph.num_vertices <= 100_000_000 else "distributed"
-    try:
-        if mode == "star":
-            labels_df, _ = _cc_star_distributed(und)
-            return labels_df
-        if mode == "broadcast":
-            labels, _ = _cc_broadcast(und, max_iter)
-            import pandas as pd
+    if mode == "star":
+        labels_df, _ = _cc_star_distributed(und)
+        return labels_df
+    if mode == "broadcast":
+        labels, _ = _cc_broadcast(und, max_iter)
+        import pandas as pd
 
-            pdf = pd.DataFrame(
-                {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
-            )
-            return graph.spark.createDataFrame(pdf)
-        labels_df, _ = _cc_distributed(und, max_iter)
-        return labels_df.withColumnRenamed("label", "component")
-    finally:
-        und.unpersist()
+        pdf = pd.DataFrame(
+            {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
+        )
+        return graph.spark.createDataFrame(pdf)
+    labels_df, _ = _cc_distributed(und, max_iter)
+    return labels_df.withColumnRenamed("label", "component")
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

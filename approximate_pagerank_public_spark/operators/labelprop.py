@@ -10,22 +10,25 @@ deterministic (the classic async variants are randomized; deterministic
 synchronous variants are required for golden parity testing and
 cross-engine oracle replay).
 
-One implementation serves both scales: the per-(dst,label) weight
-aggregation is a DataFrame ``groupBy(dst, label).sum`` with map-side
-partial aggregation, and the argmax is a window over each dst group —
-all JVM-side, no Python in the loop.
+Label propagation has two paths over the memoized symmetrized graph
+(``Graph.undirected``):
+
+- **blocks** (``mode="broadcast"``): labels live on the driver and
+  every round is :func:`plans.blocks.vote_block` over the graph's
+  mmapped CSR blocks — a lexsort + sequential weight sum per
+  (dst, label) and a per-dst argmax, no Spark job per round;
+- **DataFrame** (``mode="dataframe"``): state stays on the cluster — a
+  ``groupBy(dst, label).sum`` with map-side partial aggregation and a
+  window argmax per dst group, ``local_ckpt`` rotation per round.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
@@ -34,89 +37,30 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
-_VOTE_SCHEMA = StructType(
-    [
-        StructField("dst", LongType()),
-        StructField("label", LongType()),
-        StructField("w", DoubleType()),
-    ]
-)
+_LPA_MODES = ("auto", "broadcast", "dataframe")
 
 
-def _vote_partials(edges: DataFrame, load_labels) -> DataFrame:
-    """Per-partition partial ``(dst, label, Σweight)`` votes — the
-    map-side combine of the LPA superstep, vectorized (lexsort +
-    reduceat), labels shipped via shm/broadcast like the rank state."""
+def _lpa_broadcast(und: Graph, max_iter: int) -> np.ndarray:
+    """Driver-state LPA on the CSR blocks of the symmetrized graph: each
+    round votes block by block and scatter-assigns the winners — exact
+    because the blocks' dst sets are disjoint."""
+    from approximate_pagerank_public_spark.plans.blocks import (
+        _edge_dst,
+        load_block,
+        vote_block,
+    )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        labels = load_labels()
-        ds, ls, ws = [], [], []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            src = b.column("src").to_numpy(zero_copy_only=False)
-            dst = b.column("dst").to_numpy(zero_copy_only=False)
-            w = b.column("weight").to_numpy(zero_copy_only=False)
-            lab = np.asarray(labels)[src]
-            order = np.lexsort((lab, dst))
-            d, l, wt = dst[order], lab[order], w[order]
-            brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-            starts = np.flatnonzero(brk)
-            ds.append(d[starts])
-            ls.append(l[starts])
-            ws.append(np.add.reduceat(wt, starts))
-        if not ds:
-            return
-        d = np.concatenate(ds)
-        l = np.concatenate(ls)
-        w = np.concatenate(ws)
-        order = np.lexsort((l, d))
-        d, l, w = d[order], l[order], w[order]
-        brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-        starts = np.flatnonzero(brk)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(d[starts]),
-                pa.array(l[starts]),
-                pa.array(np.add.reduceat(w, starts)),
-            ],
-            names=["dst", "label", "w"],
-        )
-
-    return edges.mapInArrow(kernel, _VOTE_SCHEMA)
-
-
-def _lpa_broadcast(graph: Graph, und: Graph, max_iter: int) -> np.ndarray:
-    """Driver-state LPA: one shuffle-free Spark job per round (partial
-    votes), argmax merge on the driver — same shape as the PageRank/CC
-    broadcast supersteps."""
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
-
-    n = graph.num_vertices
-    labels = np.arange(n, dtype=np.int64)
+    blocks = und.blocks
+    parts = []
+    for pid in blocks.pids:
+        blk = load_block(blocks.dir, pid)
+        parts.append((blk, np.asarray(_edge_dst(blocks.dir, pid, blk))))
+    labels = np.arange(und.num_vertices, dtype=np.int64)
     for _ in range(max_iter):
-        ship = _RankShip(graph.spark, labels)
-        try:
-            pdf = _vote_partials(und.edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
-        if not len(pdf):
-            break
-        d = pdf["dst"].to_numpy(np.int64)
-        l = pdf["label"].to_numpy(np.int64)
-        w = pdf["w"].to_numpy(np.float64)
-        order = np.lexsort((l, d))
-        d, l, w = d[order], l[order], w[order]
-        brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-        starts = np.flatnonzero(brk)
-        dd, ll = d[starts], l[starts]
-        ww = np.add.reduceat(w, starts)
-        # argmax with the deterministic tie-break: (w desc, label asc)
-        o2 = np.lexsort((ll, -ww, dd))
-        dd2, ll2 = dd[o2], ll[o2]
-        first = np.flatnonzero(np.r_[True, dd2[1:] != dd2[:-1]])
         new = labels.copy()
-        new[dd2[first]] = ll2[first]
+        for blk, edge_dst in parts:
+            gd, best = vote_block(blk, edge_dst, labels)
+            new[gd] = best
         if np.array_equal(new, labels):
             break
         labels = new
@@ -125,66 +69,64 @@ def _lpa_broadcast(graph: Graph, und: Graph, max_iter: int) -> np.ndarray:
 
 def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> DataFrame:
     """``(id, label)`` after ``max_iter`` synchronous rounds (early-stops
-    on a fixpoint). ``mode``: 'broadcast' (driver-held labels, one
-    shuffle-free job/round), 'dataframe' (state stays on the cluster),
-    'auto' picks by vertex count like ``pagerank``."""
+    on a fixpoint). ``mode``: 'broadcast' (driver-held labels voted on
+    the CSR blocks, no Spark job per round), 'dataframe' (state stays
+    on the cluster), 'auto' picks 'broadcast' when the vertex count is
+    broadcastable (like ``pagerank``) and dst-disjoint blocks exist."""
     from approximate_pagerank_public_spark.operators.pagerank import (
         BROADCAST_MAX_VERTICES,
     )
 
-    und = graph.undirected()
-    if mode == "auto":
-        mode = (
-            "broadcast" if graph.num_vertices <= BROADCAST_MAX_VERTICES else "dataframe"
+    if mode not in _LPA_MODES:
+        raise ValueError(
+            f"label_propagation: unknown mode {mode!r}; expected one of {_LPA_MODES}"
         )
-    if mode == "broadcast":
-        try:
+    und = graph.undirected()
+    if mode == "auto" and graph.num_vertices > BROADCAST_MAX_VERTICES:
+        mode = "dataframe"
+    if mode != "dataframe":
+        if und.blocks is not None and und.blocks.dst_disjoint:
             import pandas as pd
 
-            labels = _lpa_broadcast(graph, und, max_iter)
-            return graph.spark.createDataFrame(
-                pd.DataFrame(
-                    {"id": np.arange(len(labels), dtype=np.int64), "label": labels}
-                )
+            labels = _lpa_broadcast(und, max_iter)
+            ids = np.arange(len(labels), dtype=np.int64)
+            return graph.spark.createDataFrame(pd.DataFrame({"id": ids, "label": labels}))
+        if mode == "broadcast":
+            raise ValueError(
+                "label_propagation: mode='broadcast' needs dst-disjoint CSR "
+                "blocks (a local master with shared memory)"
             )
-        finally:
-            und.unpersist()
     spark = graph.spark
     p = graph.num_partitions
     labels = und.vertices.withColumn("label", F.col("id"))
     labels, label_ids = local_ckpt(labels.repartition(p, "id"))
-    try:
-        for _ in range(max_iter):
-            votes = (
-                und.edges.join(
-                    labels.select(F.col("id").alias("src"), F.col("label")), "src"
-                )
-                .groupBy("dst", "label")
-                .agg(F.sum("weight").alias("w"))
-            )
-            w = Window.partitionBy("dst").orderBy(F.col("w").desc(), F.col("label").asc())
-            best = (
-                votes.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .select(F.col("dst").alias("id"), F.col("label").alias("new_label"))
-            )
-            new, new_ids = local_ckpt(
-                labels.join(best, "id", "left")
-                .select("id", F.coalesce("new_label", "label").alias("label"))
-                .repartition(p, "id")
-            )
-            changed = (
-                new.join(labels.withColumnRenamed("label", "_old"), "id")
-                .where(F.col("label") != F.col("_old"))
-                .count()
-            )
-            free_local_ckpt(spark, label_ids)
-            labels, label_ids = new, new_ids
-            if changed == 0:
-                break
-        return labels
-    finally:
-        und.unpersist()
+    for _ in range(max_iter):
+        votes = (
+            und.edges.join(labels.select(F.col("id").alias("src"), F.col("label")), "src")
+            .groupBy("dst", "label")
+            .agg(F.sum("weight").alias("w"))
+        )
+        w = Window.partitionBy("dst").orderBy(F.col("w").desc(), F.col("label").asc())
+        best = (
+            votes.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .select(F.col("dst").alias("id"), F.col("label").alias("new_label"))
+        )
+        new, new_ids = local_ckpt(
+            labels.join(best, "id", "left")
+            .select("id", F.coalesce("new_label", "label").alias("label"))
+            .repartition(p, "id")
+        )
+        changed = (
+            new.join(labels.withColumnRenamed("label", "_old"), "id")
+            .where(F.col("label") != F.col("_old"))
+            .count()
+        )
+        free_local_ckpt(spark, label_ids)
+        labels, label_ids = new, new_ids
+        if changed == 0:
+            break
+    return labels
 
 
 def golden_label_propagation(
@@ -657,30 +599,21 @@ def seeded_label_propagation(
     p = graph.num_partitions
     und = graph.undirected()
     seeds = seeds.select("id", "label")
-    try:
-        labels, label_ids = local_ckpt(seeds.repartition(p, "id"))
-        for _ in range(rounds):
-            votes = (
-                und.edges.join(
-                    labels.select(F.col("id").alias("src"), "label"), "src"
-                )
-                .groupBy("dst", "label")
-                .agg(F.sum("weight").alias("w"))
-            )
-            w = Window.partitionBy("dst").orderBy(
-                F.col("w").desc(), F.col("label").asc()
-            )
-            best = (
-                votes.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .select(F.col("dst").alias("id"), "label")
-            )
-            nxt = seeds.unionAll(
-                best.join(seeds.select("id"), "id", "left_anti")
-            )
-            nxt, new_ids = local_ckpt(nxt.repartition(p, "id"))
-            free_local_ckpt(spark, label_ids)
-            labels, label_ids = nxt, new_ids
-        return labels
-    finally:
-        und.unpersist()
+    labels, label_ids = local_ckpt(seeds.repartition(p, "id"))
+    for _ in range(rounds):
+        votes = (
+            und.edges.join(labels.select(F.col("id").alias("src"), "label"), "src")
+            .groupBy("dst", "label")
+            .agg(F.sum("weight").alias("w"))
+        )
+        w = Window.partitionBy("dst").orderBy(F.col("w").desc(), F.col("label").asc())
+        best = (
+            votes.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .select(F.col("dst").alias("id"), "label")
+        )
+        nxt = seeds.unionAll(best.join(seeds.select("id"), "id", "left_anti"))
+        nxt, new_ids = local_ckpt(nxt.repartition(p, "id"))
+        free_local_ckpt(spark, label_ids)
+        labels, label_ids = nxt, new_ids
+    return labels

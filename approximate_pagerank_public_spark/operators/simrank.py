@@ -300,6 +300,8 @@ def simrank_mc(
             free_local_ckpt(spark, ck_ids)
             ck_ids = new_ids
         state = nxt
+    # t == iters always checkpointed, so nothing downstream reads ia
+    ia.unpersist()
 
     # integer micro-unit score table, computed driver-side (no libm pow
     # in either engine): tau -> round(c^tau * 1e6)

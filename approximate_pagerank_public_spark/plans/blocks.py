@@ -270,6 +270,29 @@ def relax_block(
     return gd[imp], new[imp]
 
 
+def vote_block(blk: tuple, edge_dst: np.ndarray, labels: np.ndarray):
+    """One label-propagation vote over a CSR block: for every dst row,
+    the label with the greatest summed in-edge weight, ties → smaller
+    label. Returns ``(gd, best)`` (global dst ids, winning labels).
+
+    The stable lexsort keeps each (dst, label) group in the block's
+    (src-tile, src) order — ascending src — and ``bincount`` adds
+    sequentially (``reduceat`` sums long groups pairwise), so the float
+    vote sums match ``golden_label_propagation`` bit for bit."""
+    src_b, w, udst, *_ = blk
+    lab = labels[np.asarray(src_b)]
+    order = np.lexsort((lab, edge_dst))
+    d, l = np.asarray(edge_dst)[order], lab[order]
+    brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
+    starts = np.flatnonzero(brk)
+    dd, ll = d[starts], l[starts]
+    ww = np.bincount(np.cumsum(brk) - 1, weights=np.asarray(w)[order])
+    o2 = np.lexsort((ll, -ww, dd))
+    dd, ll = dd[o2], ll[o2]
+    first = np.flatnonzero(np.r_[True, dd[1:] != dd[:-1]])
+    return np.asarray(udst)[dd[first]], ll[first]
+
+
 def shm_available(spark: SparkSession) -> bool:
     return spark.sparkContext.master.startswith("local") and os.path.isdir(_SHM_DIR)
 

@@ -106,6 +106,7 @@ class Graph:
         self._blocks = None
         self._dist_blocks = None
         self._rev_graph: "Graph | None" = None
+        self._undirected: "Graph | None" = None
 
     def reversed_graph(self) -> "Graph":
         """Memoized transposed Graph (dst-hash layout + CSR blocks of
@@ -236,6 +237,9 @@ class Graph:
         if self._rev_graph is not None:
             self._rev_graph.unpersist()
             self._rev_graph = None
+        if self._undirected is not None:
+            self._undirected.unpersist()
+            self._undirected = None
 
     # -------------------------------------------------------- constructors
     @classmethod
@@ -291,7 +295,17 @@ class Graph:
     def undirected(self) -> "Graph":
         """Symmetrized copy (reference ``undirectFast``,
         ``utils.hpp:618-671``): union with reversed edges, dedup,
-        re-normalize weights."""
+        re-normalize weights.
+
+        Memoized like :meth:`reversed_graph`: CC, LPA, SCC, bridges and
+        diameter all reuse one cached edge set and its CSR blocks, and
+        callers never release it — the parent's :meth:`unpersist` does.
+        A caller that unpersists the returned graph anyway gets a fresh
+        build on the next call, never a released one."""
+        if self._undirected is not None:
+            if self._undirected.edges.is_cached:
+                return self._undirected
+            self._undirected.unpersist()  # a caller released it; drop its blocks too
         from pyspark.sql.window import Window
 
         e = self.edges.select("src", "dst")
@@ -302,4 +316,7 @@ class Graph:
         )
         w = Window.partitionBy("src")
         sym = sym.select("src", "dst", (F.lit(1.0) / F.count("*").over(w)).alias("weight"))
-        return Graph(sym, num_vertices=self.num_vertices, num_partitions=self.num_partitions)
+        self._undirected = Graph(
+            sym, num_vertices=self.num_vertices, num_partitions=self.num_partitions
+        )
+        return self._undirected

@@ -1,6 +1,10 @@
 """Exact-count parity: connected components, label propagation, triangles."""
 
+import glob
+import os
+
 import numpy as np
+import pytest
 
 from approximate_pagerank_public_spark.functions import golden
 from approximate_pagerank_public_spark.operators.components import (
@@ -448,3 +452,147 @@ def test_louvain_driver_and_distributed_paths_bit_identical(g_rand, monkeypatch)
     monkeypatch.setattr(lp, "LOUVAIN_DRIVER_MAX_ROWS", 0)
     dist = lp.louvain_rounds(g_rand, rounds=4).toPandas().sort_values("id")
     assert (drv["label"].to_numpy() == dist["label"].to_numpy()).all()
+
+
+# ------------------------------------------- label propagation on blocks
+
+
+def _lpa_labels(g, **kw):
+    return label_propagation(g, **kw).toPandas().sort_values("id")["label"].to_numpy()
+
+
+def test_label_propagation_blocks_match_golden_random(g_rand):
+    s, d, w = g_rand.undirected().edges_numpy()
+    gold = golden_label_propagation(s, d, w, 300, max_iter=10)
+    assert (_lpa_labels(g_rand, max_iter=10, mode="broadcast") == gold).all()
+
+
+def test_label_propagation_blocks_multi_tile_hubs(spark):
+    """More vertices than one src tile holds: each hub's in-edges come
+    from across the id range, so its votes span several tiles of its
+    block and must still sum in the golden's ascending-src order."""
+    from approximate_pagerank_public_spark.plans.blocks import TILE_ROWS, load_block
+
+    n = 3 * TILE_ROWS + 500
+    rng = np.random.default_rng(11)
+    src = rng.integers(0, n, 2 * n)
+    dst = (src + rng.integers(1, 40, 2 * n)) % n
+    hubs = [7, TILE_ROWS + 3, 2 * TILE_ROWS + 9]
+    for h in hubs:
+        fan = rng.choice(n, 400, replace=False)
+        src = np.concatenate([src, fan])
+        dst = np.concatenate([dst, np.full(400, h)])
+    g = Graph.from_edge_arrays(spark, src, dst, num_vertices=n, num_partitions=4)
+    und = g.undirected()
+    blocks = und.blocks
+    tiles = [len(load_block(blocks.dir, pid)[5]) - 1 for pid in blocks.pids]  # tb
+    assert min(tiles) > 1
+    s, d, w = und.edges_numpy()
+    gold = golden_label_propagation(s, d, w, n, max_iter=5)
+    assert (_lpa_labels(g, max_iter=5) == gold).all()
+    g.unpersist()
+
+
+def test_vote_block_sums_sequentially(tmp_path):
+    """Label 50's twelve votes sum (sequentially, as the golden adds
+    them) to exactly label 5's single vote, so the tie goes to the
+    smaller label 5; a pairwise sum of the twelve rounds one ulp up
+    and would hand the vertex to 50."""
+    from approximate_pagerank_public_spark.plans.blocks import (
+        _BLOCK_ARRAYS,
+        _edge_dst,
+        build_tiled_block,
+        vote_block,
+    )
+
+    w50 = 1.0 / np.random.default_rng(3).integers(2, 30, 12)
+    seq = 0.0
+    for x in w50:
+        seq += x
+    assert np.add.reduce(w50) != seq  # the trap this test guards
+    src = np.arange(1, 14)
+    w = np.r_[w50, seq]
+    arrays = build_tiled_block(src, np.zeros(13, dtype=np.int64), w)
+    blk = tuple(arrays[name] for name in _BLOCK_ARRAYS)
+    labels = np.r_[0, np.full(12, 50), 5].astype(np.int64)
+    gd, best = vote_block(blk, _edge_dst(str(tmp_path), 0, blk), labels)
+    assert gd.tolist() == [0] and best.tolist() == [5]
+
+
+def test_label_propagation_broadcast_equals_dataframe(g_rand):
+    a = _lpa_labels(g_rand, max_iter=10, mode="broadcast")
+    b = _lpa_labels(g_rand, max_iter=10, mode="dataframe")
+    assert (a == b).all()
+
+
+@pytest.mark.parametrize("op", [label_propagation, connected_components])
+def test_unknown_mode_raises(g5, op):
+    with pytest.raises(ValueError, match="broadcst"):
+        op(g5, mode="broadcst")
+
+
+# ------------------------------------------- memoized undirected graph
+
+
+def _two_island_graph(spark):
+    return Graph.from_edge_arrays(
+        spark, [0, 1, 3, 5], [1, 2, 4, 6], num_vertices=7, num_partitions=4
+    )
+
+
+def test_undirected_is_memoized_and_rebuilt_after_caller_unpersist(spark):
+    g = _two_island_graph(spark)
+    und = g.undirected()
+    assert g.undirected() is und
+    und.unpersist()
+    fresh = g.undirected()
+    assert fresh is not und and fresh.edges.is_cached
+    assert fresh.num_edges == 8
+    g.unpersist()
+
+
+def test_graph_unpersist_releases_undirected(spark):
+    g = _two_island_graph(spark)
+    und = g.undirected()
+    connected_components(g).count()  # builds the child's CSR blocks
+    block_dir = und.blocks.dir
+    assert os.path.isdir(block_dir)
+    g.unpersist()
+    assert not os.path.exists(block_dir)
+    assert not und.edges.storageLevel.useMemory
+    assert not und.edges.storageLevel.useDisk
+
+
+@pytest.mark.parametrize("child_first", [True, False])
+def test_double_unpersist_either_order(spark, child_first):
+    g = _two_island_graph(spark)
+    und = g.undirected()
+    und.blocks  # noqa: B018 — build the block dir both unpersists touch
+    first, second = (und, g) if child_first else (g, und)
+    first.unpersist()
+    second.unpersist()
+    g.unpersist()
+    und.unpersist()
+
+
+def _block_root_bytes() -> int:
+    from approximate_pagerank_public_spark.plans.blocks import _SHM_DIR
+
+    total = 0
+    for d in glob.glob(os.path.join(_SHM_DIR, "apr_blocks_*")):
+        for root, _dirs, files in os.walk(d):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    return total
+
+
+def test_exact_diameter_leaves_nothing_after_graph_unpersist(spark):
+    from approximate_pagerank_public_spark.operators.traversal import exact_diameter
+
+    jsc = spark.sparkContext._jsc
+    rdds, shm = jsc.getPersistentRDDs().size(), _block_root_bytes()
+    g = _two_island_graph(spark)
+    assert exact_diameter(g).first()["diameter"] == 2
+    g.unpersist()
+    # <=: Spark's ContextCleaner may drop an unrelated, unreferenced RDD meanwhile
+    assert jsc.getPersistentRDDs().size() <= rdds
+    assert _block_root_bytes() == shm
